@@ -119,16 +119,24 @@ object Deletes {
     if (!exists(spark, indexPath)) None
     else Some(spark.read.parquet(s"$indexPath/deletes").select(col("docId").cast("long")))
 
-  /** Sorted distinct deleted docIds — the SMALL-set broadcast path only;
-    * callers must gate on [[count]] (IndexSearcher.deleteBroadcastMax).
+  private def reader(spark: SparkSession, indexPath: String): PointReader =
+    new PointReader(spark.sparkContext.hadoopConfiguration, s"$indexPath/deletes")
+
+  /** Upper bound on the deleted-doc count, from the delete table's footer
+    * row counts (repeated deletes of one doc count each time) — the size
+    * gate of the SMALL path, read without a Spark job.
     */
-  def load(spark: SparkSession, indexPath: String): Array[Long] = {
-    import spark.implicits._
-    df(spark, indexPath) match {
-      case None => Array.emptyLongArray
-      case Some(d) => d.as[Long].distinct().collect().sorted
-    }
-  }
+  def rowBound(spark: SparkSession, indexPath: String): Long =
+    if (!exists(spark, indexPath)) 0L else reader(spark, indexPath).rowCount
+
+  /** Sorted distinct deleted docIds, read on the driver without a Spark
+    * job — the SMALL-set broadcast path only; callers must gate on
+    * [[rowBound]] (IndexSearcher.deleteBroadcastMax).
+    */
+  def load(spark: SparkSession, indexPath: String): Array[Long] =
+    if (!exists(spark, indexPath)) Array.emptyLongArray
+    else reader(spark, indexPath).rows(Seq("docId"), None)
+      .collect { case Array(id: Long) => id }.distinct.sorted.toArray
 
   /** Per-range sorted delete arrays: (rangeId, dels) — every aggregation
     * buffer ≤ docsPerRange ids; joined onto posting rows at query time.

@@ -419,8 +419,10 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
         sum("ttf").as("totalTermFreq"),
         when(sum("docFreq") === 1L, max("firstDocId")).otherwise(-1L).as("singletonDocId"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // (field, term)-sorted files: footer/page min/max then prune the
+    // searcher's job-free dictionary point reads (PointReader)
     val termsJob = Future {
-      termsAgg.write.mode("overwrite").parquet(termsPath)
+      termsAgg.sortWithinPartitions("field", "term").write.mode("overwrite").parquet(termsPath)
     }
     val docs = spark.read.parquet(docsPath)
     // one pass over docs: rollup gives per-segment rows, the global totals
@@ -598,6 +600,7 @@ final class IndexBuilder(spark: SparkSession, val config: IndexConfig = IndexCon
           (coalesce(col("totalTermFreq"), lit(0L)) + coalesce(col("dTtf"), lit(0L))).as("totalTermFreq"),
           when(coalesce(col("docFreq"), lit(0L)) + coalesce(col("dDf"), lit(0L)) === 1L,
             coalesce(col("singletonDocId"), col("dSingle"))).otherwise(-1L).as("singletonDocId"))
+        .sortWithinPartitions("field", "term") // as in publish: prunable point reads
         .write.mode("overwrite").parquet(termsOut)
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.codec.PostingsCodec
-import graft.index.IndexManifest
+import graft.index.{IndexManifest, PointReader}
 
 /** Compiled, serializable query plan: per-leaf scorers bound to term indexes
   * within the query's term universe (up to 1024 distinct terms, mirroring the
@@ -287,12 +287,13 @@ final class IndexSearcher(
 
   val manifest: IndexManifest = IndexManifest.load(spark, indexPath)
 
-  private lazy val persistedDeleteCount: Long =
-    graft.index.Deletes.count(spark, indexPath)
-
-  /** True when deletes evaluate via the distributed per-range join. */
+  /** True when deletes evaluate via the distributed per-range join. The
+    * persisted side gates on the footer row-count upper bound, so a
+    * broadcast-sized set is known small without a Spark job.
+    */
   lazy val rangedDeletes: Boolean =
-    extraDeletesDF.nonEmpty || persistedDeleteCount > deleteBroadcastMax
+    extraDeletesDF.nonEmpty ||
+      graft.index.Deletes.rowBound(spark, indexPath) > deleteBroadcastMax
 
   /** liveDocs SMALL path: persisted deletes ∪ searcher-scoped extras, sorted
     * for binary search inside the range evaluator. Applied on every path —
@@ -334,12 +335,11 @@ final class IndexSearcher(
     suggestCache.clear()
   }
 
-  /** A view of this index with additional (non-persisted) deleted docIds. */
   /** Derived delete views INHERIT a snapshot of this searcher's stats
     * caches: a delete view does not change statistics (deleted docs keep
     * counting toward df/ttf/collection stats until a reclaiming merge — the
     * reference's liveDocs semantics), so re-fetching them in the view would
-    * pay an identical terms-dict job for identical values. A snapshot (not
+    * pay an identical terms-dict read for identical values. A snapshot (not
     * shared maps): later seeding of the view (MultiSearcher ownership)
     * must never write through to this searcher.
     */
@@ -363,6 +363,7 @@ final class IndexSearcher(
     this
   }
 
+  /** A view of this index with additional (non-persisted) deleted docIds. */
   def withDeletes(docIds: Array[Long]): IndexSearcher =
     inheritCaches(new IndexSearcher(spark, indexPath, field, similarity,
       extraDeletes ++ docIds, extraDeletesDF, deleteBroadcastMax))
@@ -392,33 +393,36 @@ final class IndexSearcher(
 
   private lazy val termsDF: DataFrame = spark.read.parquet(manifest.termsLocation)
   private lazy val postingsDF: DataFrame = spark.read.parquet(s"$indexPath/postings")
-  private lazy val fieldStatsDF: DataFrame = spark.read.parquet(manifest.statsLocation)
+
+  /** Job-free point readers for the lookups bounded by construction (query
+    * keys, fieldstats, a page of docIds, the driver-local posting fetch) —
+    * each a point-in-time listing, taken on first use.
+    */
+  @transient private lazy val termsReader = reader(manifest.termsLocation)
+  @transient private lazy val statsReader = reader(manifest.statsLocation)
+  @transient private lazy val docsReader = reader(s"$indexPath/docs")
+  @transient private lazy val postingsReader = reader(s"$indexPath/postings")
+  private def reader(dir: String) = new PointReader(spark.sparkContext.hadoopConfiguration, dir)
 
   private val csCache = scala.collection.concurrent.TrieMap.empty[String, CollectionStats]
 
-  def collectionStats(f: String): CollectionStats = csCache.getOrElseUpdate(f, {
-    val r = fieldStatsDF.where(col("field") === f).collect()(0)
-    CollectionStats(f,
-      maxDoc = r.getAs[Long]("maxDoc"),
-      docCount = r.getAs[Long]("docCount"),
-      sumTotalTermFreq = r.getAs[Long]("sumTotalTermFreq"),
-      sumDocFreq = r.getAs[Long]("sumDocFreq"))
-  })
+  def collectionStats(f: String): CollectionStats = collectionStatsOpt(f).getOrElse(
+    throw new NoSuchElementException(s"field '$f' is not indexed in $indexPath"))
 
-  /** Batch-fill csCache for every missing field in ONE fieldstats scan —
-    * prepare() runs this concurrently with the terms-dict lookup, so a cold
-    * query pays max(two metadata point jobs), not their sum.
+  /** Batch-fill csCache for every missing field in ONE fieldstats read —
+    * prepare() runs this concurrently with the terms-dict lookup.
     */
   private def warmCollectionStats(fields: Seq[String]): Unit = {
     val missing = fields.filterNot(csCache.contains)
     if (missing.nonEmpty)
-      fieldStatsDF.where(col("field").isin(missing: _*)).collect().foreach { r =>
-        csCache.putIfAbsent(r.getAs[String]("field"), CollectionStats(
-          r.getAs[String]("field"),
-          maxDoc = r.getAs[Long]("maxDoc"),
-          docCount = r.getAs[Long]("docCount"),
-          sumTotalTermFreq = r.getAs[Long]("sumTotalTermFreq"),
-          sumDocFreq = r.getAs[Long]("sumDocFreq")))
+      statsReader.rows(Seq("field", "maxDoc", "docCount", "sumTotalTermFreq", "sumDocFreq"),
+        Some(PointReader.stringIn("field", missing))).foreach { r =>
+        val f = r(0).asInstanceOf[String]
+        csCache.putIfAbsent(f, CollectionStats(f,
+          maxDoc = r(1).asInstanceOf[Long],
+          docCount = r(2).asInstanceOf[Long],
+          sumTotalTermFreq = r(3).asInstanceOf[Long],
+          sumDocFreq = r(4).asInstanceOf[Long]))
       }
   }
 
@@ -428,18 +432,10 @@ final class IndexSearcher(
     * sharded search ([[MultiSearcher]]) merges stats across shards whose
     * field sets may differ.
     */
-  def collectionStatsOpt(f: String): Option[CollectionStats] =
-    csCache.get(f).orElse {
-      fieldStatsDF.where(col("field") === f).collect().headOption.map { r =>
-        val cs = CollectionStats(f,
-          maxDoc = r.getAs[Long]("maxDoc"),
-          docCount = r.getAs[Long]("docCount"),
-          sumTotalTermFreq = r.getAs[Long]("sumTotalTermFreq"),
-          sumDocFreq = r.getAs[Long]("sumDocFreq"))
-        csCache.put(f, cs)
-        cs
-      }
-    }
+  def collectionStatsOpt(f: String): Option[CollectionStats] = {
+    warmCollectionStats(Seq(f))
+    csCache.get(f)
+  }
 
   /** Replace the statistics this searcher scores with ([[MultiSearcher]]
     * seeds every shard with GLOBALLY merged stats, so each shard scores
@@ -489,20 +485,22 @@ final class IndexSearcher(
       }
   }
 
-  /** Driver-side stats lookup for the query's few (field, term) keys
-    * (broadcast-join equivalent; the terms table never ships anywhere).
-    * Cached per searcher — repeated query terms cost zero jobs (the
+  /** Driver-side stats lookup for the query's few (field, term) keys: a
+    * job-free point read of the terms dictionary (the table never ships
+    * anywhere). Cached per searcher — repeated query terms cost zero jobs (the
     * reference's TermContext reuse).
     */
   def termStats(keys: Seq[(String, String)]): Map[(String, String), TermStats] = {
-    val missing = keys.filterNot(statsCache.contains)
+    val missing = keys.filterNot(statsCache.contains).distinct
     if (missing.nonEmpty) {
-      val fetched = termsDF
-        .where(pairPredicate(missing))
-        .select("field", "term", "docFreq", "totalTermFreq", "singletonDocId")
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          ((TermStats(r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)), r.getLong(4))))
+      val fetched = termsReader
+        .rows(Seq("field", "term", "docFreq", "totalTermFreq", "singletonDocId"),
+          Some(PointReader.keysIn(missing)))
+        .map { r =>
+          val (f, t) = (r(0).asInstanceOf[String], r(1).asInstanceOf[String])
+          (f, t) -> ((TermStats(f, t, r(2).asInstanceOf[Long], r(3).asInstanceOf[Long]),
+            Option(r(4)).fold(-1L)(_.asInstanceOf[Long])))
+        }
         .toMap
       missing.foreach { k =>
         statsCache.put(k, fetched.get(k).map(_._1))
@@ -853,8 +851,8 @@ final class IndexSearcher(
     val fields = keys.map(_._1).distinct
     val fieldIdx = fields.zipWithIndex.toMap
     // the two cold metadata lookups (fieldstats, terms dict) are
-    // independent bounded point jobs — overlap them so a fresh searcher's
-    // first query pays ONE job round trip here, not two
+    // independent point reads — overlap them so a fresh searcher's first
+    // query pays one cold footer round trip here, not two
     val csFut =
       if (fields.exists(f => !csCache.contains(f)))
         Some(scala.concurrent.Future(warmCollectionStats(fields))(
@@ -876,26 +874,22 @@ final class IndexSearcher(
   private lazy val docsDF: DataFrame = spark.read.parquet(s"$indexPath/docs")
 
   /** Stored-fields lookup (reference reader.Document(hit.Doc),
-    * /root/reference/core/document/document.go:75-133): docId-pushdown
-    * parquet point read.
+    * /root/reference/core/document/document.go:75-133): a job-free docId
+    * point read of the docs table.
     */
   def doc(docId: Long): Option[graft.index.DocRow] = docs(Seq(docId)).headOption
 
-  def docs(docIds: Seq[Long]): Seq[graft.index.DocRow] = {
-    import spark.implicits._
-    val base = docsDF.where(col("docId").isin(docIds: _*))
-    // version-1 indexes predate per-field dls: degrade to an empty map (the
-    // per-field read paths fall back to dl) instead of an AnalysisException
-    val withFd =
-      if (base.columns.contains("fieldDls")) base
-      else base.withColumn("fieldDls",
-        map().cast(org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.IntegerType)))
-    withFd
-      .select("docId", "segId", "repo", "path", "commit", "lang", "contentSha",
-        "dl", "norm", "fieldDls")
-      .as[graft.index.DocRow].collect().toSeq
-  }
+  def docs(docIds: Seq[Long]): Seq[graft.index.DocRow] =
+    if (docIds.isEmpty) Nil
+    else docsReader.rows(Seq("docId", "segId", "repo", "path", "commit", "lang",
+      "contentSha", "dl", "norm", "fieldDls"), Some(PointReader.longIn("docId", docIds.distinct)))
+      .map(r => graft.index.DocRow(r(0).asInstanceOf[Long], r(1).asInstanceOf[Int],
+        r(2).asInstanceOf[String], r(3).asInstanceOf[String], r(4).asInstanceOf[String],
+        r(5).asInstanceOf[String], r(6).asInstanceOf[String], r(7).asInstanceOf[Int],
+        r(8).asInstanceOf[Byte],
+        // version-1 indexes predate per-field dls: an empty map (the
+        // per-field read paths fall back to dl)
+        Option(r(9)).fold(Map.empty[String, Int])(_.asInstanceOf[Map[String, Int]])))
 
   /** MoreLikeThis (Lucene's MLT module — never ported in the reference):
     * build a query matching documents similar to a piece of TEXT. The text
@@ -1241,7 +1235,9 @@ final class IndexSearcher(
     rs.map(r => 64L + r._5.length + (if (r._6 == null) 0 else r._6.length)).sum
 
   /** Collected rows for a full-key (unfiltered) driver-local evaluation,
-    * served from / inserted into the cache per term.
+    * served from / inserted into the cache per term; misses are one
+    * job-free point read of the postings table (ranged deletes keep the
+    * Spark join).
     */
   private def collectRows(p: Prepared): Array[PRow] = {
     if (rangedDeletes) return rowsFor(p).collect()
@@ -1259,7 +1255,13 @@ final class IndexSearcher(
       if (missing.isEmpty) Array.empty[PRow]
       else {
         val anyPos = missing.exists(wantPos)
-        val rows = rowsForKeys(missing, anyPos, None).collect()
+        val rows = postingsReader
+          .rows(Seq("field", "term", "rangeId", "firstDocId", "payload") ++
+            (if (anyPos) Seq("posPayload") else Nil), Some(PointReader.keysIn(missing)))
+          .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[String],
+            r(2).asInstanceOf[Long], r(3).asInstanceOf[Long], r(4).asInstanceOf[Array[Byte]],
+            (if (anyPos) r(5) else null).asInstanceOf[Array[Byte]], null: Array[Long]))
+          .toArray
         val byKey = rows.groupBy(r => (r._1, r._2))
         rowCache.synchronized {
           missing.foreach { k =>
@@ -1339,8 +1341,8 @@ final class IndexSearcher(
           geB.value.eval(rangeId, it))
   }
 
-  /** Query terms' summed docFreq below this → driver-local evaluation (one
-    * fetch job, zero shuffles) — the Lucene-style per-node search path.
+  /** Query terms' summed docFreq below this → driver-local evaluation (a
+    * job-free point read, zero shuffles) — the Lucene-style per-node path.
     * 2M postings ≈ a few MB of packed blocks and ~10 ms of local decode;
     * only genuinely large result sets go distributed.
     */

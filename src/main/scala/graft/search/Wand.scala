@@ -105,7 +105,7 @@ object Wand {
     // already paid for. The top-k is identical (pruned ≡ exhaustive is the
     // pinned invariant); totalHits comes back EXACT (lowerBound = false)
     // instead of pruned. `cachedShortcut = false` opts out for callers that
-    // pin pruning behavior itself (WandSpec's graded-corpus test).
+    // pin pruning behavior itself (the WAND ≡ exhaustive parity specs).
     else if (cachedShortcut && searcher.servesFromRowCache(q))
       searcher.search(q, k, mode)
     else pruned(searcher, q, k, mode, phase1Ranges)

@@ -104,7 +104,8 @@ class FieldSearchSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("parser")),
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     val exact = searcher.search(q, 10, ScoreMode.Ref32)
-    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.Ref32, phase1Ranges = 4)
+    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.Ref32,
+      phase1Ranges = 4, cachedShortcut = false)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }

@@ -103,7 +103,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"mode=$mode")
     }
@@ -266,7 +266,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     }
     // boosts flow through WAND top-k identically (bounds are mode-matched)
     val viaWand = Wand.searchTopK(searcher, p.parse("scorer^2 merge"), 8,
-      ScoreMode.ExactDouble)
+      ScoreMode.ExactDouble, cachedShortcut = false)
     val exhaustive = searcher.search(p.parse("scorer^2 merge"), 8, ScoreMode.ExactDouble)
     assert(viaWand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exhaustive.scoreDocs.map(d => (d.docId, d.score)).toSeq)
@@ -333,7 +333,7 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
       BooleanQuery(List(BooleanClause(Occur.SHOULD, TermQuery(rarer)))))
     // the MLT query searches like its hand-built twin, incl. through WAND
     val full = searcher.search(q, 10, ScoreMode.ExactDouble)
-    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble)
+    val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble, cachedShortcut = false)
     assert(full.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       wand.scoreDocs.map(d => (d.docId, d.score)).toSeq)
     assert(full.totalHits > 0)

@@ -25,7 +25,8 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
 
   private def assertSafe(q: Query, k: Int, phase1: Int): Unit = {
     val exact = searcher.search(q, k, ScoreMode.Ref32)
-    val wand = Wand.searchTopK(searcher, q, k, ScoreMode.Ref32, phase1Ranges = phase1)
+    val wand = Wand.searchTopK(searcher, q, k, ScoreMode.Ref32,
+      phase1Ranges = phase1, cachedShortcut = false)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"top-k parity for $q")
     assert(wand.totalHits <= exact.totalHits)
@@ -46,9 +47,10 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     assertSafe(q, k = 25, phase1 = 4)
   }
 
-  test("pruning actually skips ranges (totalHits strictly lower-bounded)") {
-    // graded corpus: tf of "graded" grows with docId → low ranges provably
-    // below τ → phase 2 skips them
+  /** Graded corpus: tf of "graded" grows with docId → low ranges provably
+    * below τ → phase 2 skips them.
+    */
+  private lazy val gradedIndex = {
     val dir = java.nio.file.Files.createTempDirectory("graft-wand-graded").toString
     val docs = (0 until 1024).map { i =>
       val tf = 1 + i / 64
@@ -58,18 +60,35 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     val cfg = IndexConfig(analyzer = new StandardCodeAnalyzer(),
       docsPerRange = 64, numSegments = 4, segmentsPerWave = 4)
     new IndexBuilder(spark, cfg).build(docs.toDF(), dir)
-    val s = new IndexSearcher(spark, dir)
+    dir
+  }
+
+  test("pruning actually skips ranges (totalHits strictly lower-bounded)") {
+    val s = new IndexSearcher(spark, gradedIndex)
     val q = TermQuery("graded")
     val exact = s.search(q, 10, ScoreMode.Ref32)
-    // cachedShortcut = false: the exact search above populated the row
-    // cache, and this test pins the PRUNING machinery itself — the shortcut
-    // (serve fully-cached queries exhaustively, zero jobs) sits above it
+    // cachedShortcut = false (as in every parity check here): the exact
+    // search above populated the row cache, and this test pins the PRUNING
+    // machinery itself — the shortcut (serve fully-cached queries
+    // exhaustively, zero jobs) sits above it and has its own test below
     val wand = Wand.searchTopK(s, q, 10, ScoreMode.Ref32, phase1Ranges = 2,
       cachedShortcut = false)
     assert(wand.totalHitsIsLowerBound)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
     assert(wand.totalHits < exact.totalHits, "expected pruned ranges on graded tf")
+  }
+
+  test("row-cache shortcut: a fully cached query skips the pruned plan") {
+    val s = new IndexSearcher(spark, gradedIndex)
+    val q = TermQuery("graded")
+    val exact = s.search(q, 10, ScoreMode.Ref32) // caches the key's rows
+    // the exhaustive driver-local path answers: same top-k, EXACT totalHits
+    // (the pruned plan above reports a strict lower bound on this corpus)
+    val cached = Wand.searchTopK(s, q, 10, ScoreMode.Ref32, phase1Ranges = 2)
+    assert(!cached.totalHitsIsLowerBound && cached.totalHits == exact.totalHits)
+    assert(cached.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+      exact.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }
 
   test("conjunction (MUST) pruning: pruned == exhaustive") {
@@ -121,7 +140,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
           BooleanClause(Occur.SHOULD, TermQuery("import"))), minShouldMatch = 1))
       for (q <- qs; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
         val exact = s.search(q, 10, mode)
-        val wand = Wand.searchTopK(s, q, 10, mode, phase1Ranges = 4)
+        val wand = Wand.searchTopK(s, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
         assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
           exact.scoreDocs.map(d => (d.docId, d.score)).toSeq,
           s"${sim.getClass.getSimpleName}/$mode parity for $q")
@@ -145,7 +164,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("scorer"))), minShouldMatch = 2))
     for (q <- shapes; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
       assert(wand.totalHits <= exact.totalHits)
@@ -178,7 +197,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.SHOULD, TermQuery("import")))))
     for (q <- shapes; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = searcher.search(q, 10, mode)
-      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"parity $q mode=$mode")
       assert(wand.totalHits <= exact.totalHits)
@@ -187,7 +206,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     val lm = new IndexSearcher(spark, indexPath, similarity = new LMJelinekMercerSimilarity)
     val q = p.parse("parser OR (buffer AND scorer)")
     val e = lm.search(q, 10, ScoreMode.Ref32)
-    val w = Wand.searchTopK(lm, q, 10, ScoreMode.Ref32, phase1Ranges = 4)
+    val w = Wand.searchTopK(lm, q, 10, ScoreMode.Ref32, phase1Ranges = 4, cachedShortcut = false)
     assert(w.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       e.scoreDocs.map(d => (d.docId, d.score)).toSeq)
   }
@@ -209,7 +228,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val q = PhraseQuery(Seq("alpha", "beta"))
       val exact = s.search(q, 5, mode)
-      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 2)
+      val wand = Wand.searchTopK(s, q, 5, mode, phase1Ranges = 2, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"b=0 parity mode=$mode")
     }
@@ -266,7 +285,8 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     val s = new IndexSearcher(spark, dir)
     for (k <- Seq(5, 17, 40); p1 <- Seq(1, 2, 4)) {
       val exact = s.search(TermQuery("edgeterm"), k, ScoreMode.Ref32)
-      val wand = Wand.searchTopK(s, TermQuery("edgeterm"), k, ScoreMode.Ref32, phase1Ranges = p1)
+      val wand = Wand.searchTopK(s, TermQuery("edgeterm"), k, ScoreMode.Ref32,
+        phase1Ranges = p1, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"k=$k phase1=$p1")
     }
@@ -279,7 +299,8 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
         BooleanClause(Occur.MUST, TermQuery("parser")),
         BooleanClause(Occur.SHOULD, TermQuery("buffer")))))) {
       val exact = searcher.search(q, 10, ScoreMode.ExactDouble)
-      val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble, phase1Ranges = 4)
+      val wand = Wand.searchTopK(searcher, q, 10, ScoreMode.ExactDouble,
+        phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"exact-mode parity for $q")
     }
@@ -320,7 +341,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("yterm"))))
     val exact = s.search(q, 1, ScoreMode.Ref32)
     assert(exact.scoreDocs.head.docId == 0L) // score tie, smaller docId wins
-    val wand = Wand.searchTopK(s, q, 1, ScoreMode.Ref32, phase1Ranges = 1)
+    val wand = Wand.searchTopK(s, q, 1, ScoreMode.Ref32, phase1Ranges = 1, cachedShortcut = false)
     assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
       exact.scoreDocs.map(d => (d.docId, d.score)).toSeq,
       "bound==tau range pruned: tie-break winner lost")
@@ -369,7 +390,7 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
       BooleanClause(Occur.SHOULD, TermQuery("buffer"))))
     for (mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val exact = s2.search(q, 10, mode)
-      val wand = Wand.searchTopK(s2, q, 10, mode, phase1Ranges = 4)
+      val wand = Wand.searchTopK(s2, q, 10, mode, phase1Ranges = 4, cachedShortcut = false)
       assert(wand.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         exact.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"PY mixed-corpus parity $mode")
     }
