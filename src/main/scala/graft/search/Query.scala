@@ -37,7 +37,10 @@ final case class PhraseQuery(terms: Seq[String], boost: Float = 1.0f,
   * disjunctions BEFORE compilation; reaching leafKeys/compile unexpanded is
   * a bug and throws.
   */
-sealed trait MultiTermQuery extends Query
+sealed trait MultiTermQuery extends Query {
+  def boost: Float
+  def field: Option[String]
+}
 
 /** Prefix term query `field:pre*`. The reference LEXES the star but its
   * handlers panic (/root/reference/queryparser/classic/queryParserBase.go:

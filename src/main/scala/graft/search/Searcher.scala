@@ -531,68 +531,51 @@ final class IndexSearcher(
       fieldIdx: Map[String, Int]): CNode = {
     val sim = similarity
     def fld(of: Option[String]): String = of.getOrElse(field)
-    // queryNorm two-phase (search.go:152-169): v = Σ leaf weight², qn = f(v).
-    // 1 for every model except TF-IDF.
-    def v(q: Query, topBoost: Float): Float = q match {
-      case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.valueForNormalization(ts, collectionStats(fld(f)), boost * topBoost))
-          .getOrElse(0f)
-      case PhraseQuery(ts, boost, f, _) =>
-        val fn = fld(f)
-        if (ts.forall(t => stats.contains((fn, t))))
-          sim.valueForNormalization(
-            TermStats(fn, ts.mkString(" "),
-              ts.map(t => stats((fn, t)).docFreq).min,
-              ts.map(t => stats((fn, t)).totalTermFreq).sum),
-            collectionStats(fn), boost * topBoost)
-        else 0f
-      case BooleanQuery(clauses, _, boost) =>
-        // FILTER clauses are non-scoring: no queryNorm contribution (Lucene)
-        clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => v(c.query, boost * topBoost)).sum
-      case DisMaxQuery(cs, _, boost) =>
-        cs.map(c => v(c, boost * topBoost)).sum
-      case ConstantScoreQuery(_, _) => 0f // the constant is never normalized
-      case FilteredQuery(q1, _) => v(q1, topBoost) // filter side never scores
-      case q: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
+    def unsupported(q: Query): Nothing = q match {
       case p: MultiTermQuery => throw new IllegalStateException(
         s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    val qn = sim.queryNorm(math.max(v(Query.rewrite(q0), 1.0f), Float.MinPositiveValue))
-
-    // exact-double queryNorm twin (1 for every model except TF-IDF)
-    def vD(q: Query, topBoost: Double): Double = q match {
-      case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.exactValueForNormalization(ts, collectionStats(fld(f)),
-            boost.toDouble * topBoost))
-          .getOrElse(0.0)
-      case PhraseQuery(ts, boost, f, _) =>
-        val fn = fld(f)
-        if (ts.forall(t => stats.contains((fn, t))))
-          sim.exactValueForNormalization(
-            TermStats(fn, ts.mkString(" "),
-              ts.map(t => stats((fn, t)).docFreq).min,
-              ts.map(t => stats((fn, t)).totalTermFreq).sum),
-            collectionStats(fn), boost.toDouble * topBoost)
-        else 0.0
-      case BooleanQuery(clauses, _, boost) =>
-        clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => vD(c.query, boost.toDouble * topBoost)).sum
-      case DisMaxQuery(cs, _, boost) =>
-        cs.map(c => vD(c, boost.toDouble * topBoost)).sum
-      case ConstantScoreQuery(_, _) => 0.0 // the constant is never normalized
-      case FilteredQuery(q1, _) => vD(q1, topBoost) // filter side never scores
-      case q: MatchAllQuery => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"$q inside a BooleanQuery is not supported — use it top-level or " +
           "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
     }
-    val qnD = sim.exactQueryNorm(math.max(vD(Query.rewrite(q0), 1.0), Double.MinPositiveValue))
+    // queryNorm two-phase (search.go:152-169): v = Σ leaf weight², qn = f(v);
+    // 1 for every model except TF-IDF. One walk yields both arithmetics'
+    // sums: the float32 one threads float boost products (what the Ref32
+    // scorers see), the float64 one threads boost.toDouble × topBoost.
+    def v(q: Query, topF: Float, topD: Double): (Float, Double) = {
+      def leaf(ts: TermStats, fn: String, boost: Float): (Float, Double) = {
+        val cs = collectionStats(fn)
+        (sim.valueForNormalization(ts, cs, boost * topF),
+          sim.exactValueForNormalization(ts, cs, boost.toDouble * topD))
+      }
+      def sum(parts: Seq[(Float, Double)]): (Float, Double) =
+        parts.foldLeft((0f, 0.0)) { case ((a, b), (x, y)) => (a + x, b + y) }
+      q match {
+        case TermQuery(t, boost, f) =>
+          stats.get((fld(f), t)).fold((0f, 0.0))(leaf(_, fld(f), boost))
+        case PhraseQuery(ts, boost, f, _) =>
+          // a phrase normalizes as one composite term: min member df, summed ttf
+          val fn = fld(f)
+          if (ts.forall(t => stats.contains((fn, t))))
+            leaf(TermStats(fn, ts.mkString(" "),
+              ts.map(t => stats((fn, t)).docFreq).min,
+              ts.map(t => stats((fn, t)).totalTermFreq).sum), fn, boost)
+          else (0f, 0.0)
+        case BooleanQuery(clauses, _, boost) =>
+          // FILTER clauses are non-scoring: no queryNorm contribution (Lucene)
+          sum(clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
+            .map(c => v(c.query, boost * topF, boost.toDouble * topD)))
+        case DisMaxQuery(cs, _, boost) =>
+          sum(cs.map(c => v(c, boost * topF, boost.toDouble * topD)))
+        case ConstantScoreQuery(_, _) => (0f, 0.0) // the constant is never normalized
+        case FilteredQuery(q1, _) => v(q1, topF, topD) // filter side never scores
+        case other => unsupported(other)
+      }
+    }
+    val q = Query.rewrite(q0)
+    val (vF, vD) = v(q, 1.0f, 1.0)
+    val qn = sim.queryNorm(math.max(vF, Float.MinPositiveValue))
+    val qnD = sim.exactQueryNorm(math.max(vD, Double.MinPositiveValue))
 
     def node(q: Query, topBoost: Float): CNode = q match {
       case TermQuery(t, boost, f) =>
@@ -634,145 +617,32 @@ final class IndexSearcher(
         CConst(node(q1, 1.0f), s)
       case f: FilteredQuery => // rewrite() desugars these before compile
         node(Query.rewrite(f), topBoost)
-      case q: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
+      case other => unsupported(other)
     }
-    node(Query.rewrite(q0), 1.0f)
+    node(q, 1.0f)
   }
 
-  /** Compiled query + everything the executors need. */
-  private final case class Prepared(
-      q: Query, keys: Seq[(String, String)], stats: Map[(String, String), TermStats],
-      ge: GroupEval)
-
-  /** Per-searcher prefix-expansion cache: a searcher is a point-in-time view
-    * (same rationale as the row cache), so an expansion can never go stale
-    * within it. Keyed (field, prefix); values are SORTED term lists.
+  /** Per-searcher multi-term expansion cache: a searcher is a point-in-time
+    * view (same rationale as the row cache), so an expansion can never go
+    * stale within it. Keyed (field, leaf) with the leaf's boost and field
+    * reset — a typed key, so one kind of leaf can never read back another
+    * kind's expansion. Values are SORTED term lists.
     */
   private val prefixCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Seq[String]]
+    scala.collection.concurrent.TrieMap.empty[(String, MultiTermQuery), Seq[String]]
 
-  /** Matching dictionary terms for a prefix: a driver-side sorted range scan
-    * of the terms table. `startsWith` pushes down as parquet
-    * StringStartsWith (row-group pruning on the term column's min/max —
-    * metadata-cheap at any corpus size); the 1024 cap is the reference
-    * maxClauseCount acting as the rewrite budget, so the collect is bounded
-    * whatever the vocabulary.
-    */
-  private def prefixTerms(f: String, prefix: String): Seq[String] = {
-    require(prefix.nonEmpty, "empty prefix (bare '*' queries are not supported)")
-    val cached = prefixCache.get((f, prefix))
-    if (cached.isDefined) return cached.get
-    val terms = termsDF
-      .where(col("field") === f && col("term").startsWith(prefix))
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"prefix '$f:$prefix*' expands to more than 1024 terms (reference " +
-        "maxClauseCount is the rewrite budget) — narrow the prefix")
-    prefixCache.put((f, prefix), terms)
-    terms
-  }
-
-  /** Matching dictionary terms for a wildcard pattern (`*` any run, `?` one
-    * char): the literal prefix before the first wildcard pushes down
-    * (StringStartsWith), the full pattern filters DISTRIBUTED as an anchored
-    * regex BEFORE the 1025-row limit (filtering after the limit could drop
-    * matching terms hiding behind non-matching prefix-mates). A leading
-    * wildcard degrades to a vocabulary scan — dictionary-sized, never
-    * corpus-sized.
-    */
-  private def wildcardTerms(f: String, pattern: String): Seq[String] = {
-    require(pattern.exists(c => c != '*' && c != '?'),
-      s"wildcard pattern '$pattern' has no literal characters")
-    val cached = prefixCache.get((f, "wc " + pattern))
-    if (cached.isDefined) return cached.get
-    val pre = pattern.takeWhile(c => c != '*' && c != '?')
-    // anchored regex from the pattern, literals quoted
-    val rx = pattern.map {
-      case '*' => ".*"
-      case '?' => "."
-      case c => java.util.regex.Pattern.quote(c.toString)
-    }.mkString("^", "", "$")
-    var base = termsDF.where(col("field") === f)
-    if (pre.nonEmpty) base = base.where(col("term").startsWith(pre))
-    val terms = base.where(col("term").rlike(rx))
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"wildcard '$f:$pattern' expands to more than 1024 terms (reference " +
-        "maxClauseCount is the rewrite budget) — narrow the pattern")
-    prefixCache.put((f, "wc " + pattern), terms)
-    terms
-  }
-
-  /** Matching dictionary terms for an anchored regex: the pattern's leading
-    * LITERAL run (chars before the first regex metacharacter) pushes down as
-    * StringStartsWith; the full `^(?:pat)$` match filters distributed via
-    * the codegen'd `rlike` before the 1025-row cap — a vocabulary-sized
-    * scan, never corpus-sized (same shape as [[wildcardTerms]]).
-    */
-  private def regexpTerms(f: String, pattern: String): Seq[String] = {
-    require(pattern.nonEmpty, "empty regexp pattern")
-    // cheap insurance on a user-facing query type: the pattern fans out
-    // through rlike over the vocabulary, so a catastrophic-backtracking
-    // pattern would stall every dictionary task. Dictionary-sized input
-    // already caps the blast radius; these guards make the failure a fast
-    // driver-side error instead. (Heuristic: a quantified group whose body
-    // itself contains a quantifier — the classic (a+)+ shape.)
-    require(pattern.length <= 256,
-      s"regexp pattern is ${pattern.length} chars — cap is 256")
-    require(!RegexpNestedQuant.matcher(pattern).find(),
-      s"regexp '/$pattern/' nests a quantifier inside a quantified group " +
-        "(catastrophic-backtracking guard) — rewrite without nested quantifiers")
-    java.util.regex.Pattern.compile(pattern) // fail fast on driver with a clear error
-    val cached = prefixCache.get((f, "rx " + pattern))
-    if (cached.isDefined) return cached.get
-    val pre = pattern.takeWhile(c => !"\\^$.|?*+()[]{}".contains(c))
-    var base = termsDF.where(col("field") === f)
-    if (pre.nonEmpty) base = base.where(col("term").startsWith(pre))
-    val terms = base.where(col("term").rlike(s"^(?:$pattern)$$"))
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"regexp '$f:/$pattern/' expands to more than 1024 terms (reference " +
-        "maxClauseCount is the rewrite budget) — narrow the pattern")
-    prefixCache.put((f, "rx " + pattern), terms)
-    terms
-  }
-
-  /** Rewrite multi-term leaves (PrefixQuery, WildcardQuery) into bounded
-    * SHOULD disjunctions of dictionary terms in sorted order, each scoring
-    * with its own statistics (Lucene SCORING_BOOLEAN_QUERY_REWRITE). An
-    * expansion with no matching terms becomes an empty BooleanQuery (matches
-    * nothing — same contract as a TermQuery on an absent term). Every query
-    * entry point (search/scoredDocs/explain, Wand.searchTopK) expands before
-    * compiling.
+  /** Rewrite multi-term leaves (prefix/wildcard/fuzzy/range/regexp) into
+    * bounded SHOULD disjunctions of dictionary terms in sorted order, each
+    * scoring with its own statistics (Lucene SCORING_BOOLEAN_QUERY_REWRITE).
+    * An expansion with no matching terms becomes an empty BooleanQuery
+    * (matches nothing — same contract as a TermQuery on an absent term).
+    * Every query entry point (search/scoredDocs/explain, Wand.searchTopK)
+    * expands before compiling.
     */
   def expandPrefixes(q: Query): Query = q match {
-    case PrefixQuery(prefix, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(prefixTerms(fn, prefix).map(t =>
-        BooleanClause(Occur.SHOULD, TermQuery(t, boost, f))))
-    case WildcardQuery(pattern, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(wildcardTerms(fn, pattern).map(t =>
-        BooleanClause(Occur.SHOULD, TermQuery(t, boost, f))))
-    case FuzzyQuery(t, maxEdits, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(fuzzyTerms(fn, t, maxEdits).map(t2 =>
-        BooleanClause(Occur.SHOULD, TermQuery(t2, boost, f))))
-    case TermRangeQuery(lo, hi, il, iu, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(rangeTerms(fn, lo, hi, il, iu).map(t2 =>
-        BooleanClause(Occur.SHOULD, TermQuery(t2, boost, f))))
-    case RegexpQuery(pattern, boost, f) =>
-      val fn = f.getOrElse(field)
-      BooleanQuery(regexpTerms(fn, pattern).map(t2 =>
-        BooleanClause(Occur.SHOULD, TermQuery(t2, boost, f))))
+    case m: MultiTermQuery =>
+      BooleanQuery(expansionTerms(m).map(t =>
+        BooleanClause(Occur.SHOULD, TermQuery(t, m.boost, m.field))))
     case BooleanQuery(cs, msm, boost) =>
       BooleanQuery(cs.map(c => c.copy(query = expandPrefixes(c.query))), msm, boost)
     case FilteredQuery(q1, f1) => FilteredQuery(expandPrefixes(q1), expandPrefixes(f1))
@@ -784,65 +654,94 @@ final class IndexSearcher(
   /** Expanded term list for ONE multi-term leaf against THIS searcher's
     * dictionary — [[MultiSearcher]] unions these across shards (the union
     * of per-shard expansions over a partitioned corpus IS the monolithic
-    * expansion: same matching terms, same sorted order).
+    * expansion: same matching terms, same sorted order). Every kind is a
+    * driver-side collect of a terms-table scan — vocabulary-sized, never
+    * corpus-sized:
+    *  - prefix: `startsWith` pushes down as parquet StringStartsWith
+    *    (row-group pruning on the term column's min/max);
+    *  - wildcard (`*` any run, `?` one char) and regexp: the literal run
+    *    before the first metacharacter pushes down the same way, and the
+    *    full anchored pattern filters DISTRIBUTED (codegen'd `rlike`) BEFORE
+    *    the row limit — filtering after it could drop matching terms hiding
+    *    behind non-matching prefix-mates. A leading wildcard degrades to a
+    *    vocabulary scan;
+    *  - fuzzy: CLASSIC Levenshtein within `maxEdits`, evaluated distributed
+    *    (`levenshtein`) behind a length-window prefilter
+    *    (|len − len(q)| ≤ maxEdits);
+    *  - range: both bounds push down to the parquet scan.
     */
-  private[search] def expansionTerms(m: MultiTermQuery): Seq[String] = m match {
-    case PrefixQuery(p, _, f) => prefixTerms(f.getOrElse(field), p)
-    case WildcardQuery(pat, _, f) => wildcardTerms(f.getOrElse(field), pat)
-    case FuzzyQuery(t, e, _, f) => fuzzyTerms(f.getOrElse(field), t, e)
-    case TermRangeQuery(lo, hi, il, iu, _, f) =>
-      rangeTerms(f.getOrElse(field), lo, hi, il, iu)
-    case RegexpQuery(pat, _, f) => regexpTerms(f.getOrElse(field), pat)
+  private[search] def expansionTerms(m: MultiTermQuery): Seq[String] = {
+    val f = m.field.getOrElse(field)
+    val term = col("term")
+    def startingWith(pre: String)(d: DataFrame): DataFrame =
+      if (pre.isEmpty) d else d.where(term.startsWith(pre))
+    m match {
+      case PrefixQuery(prefix, _, _) =>
+        require(prefix.nonEmpty, "empty prefix (bare '*' queries are not supported)")
+        scanTerms(f, PrefixQuery(prefix), s"prefix '$f:$prefix*'", "narrow the prefix")(
+          startingWith(prefix))
+      case WildcardQuery(pattern, _, _) =>
+        require(pattern.exists(c => c != '*' && c != '?'),
+          s"wildcard pattern '$pattern' has no literal characters")
+        // anchored regex from the pattern, literals quoted
+        val rx = pattern.map {
+          case '*' => ".*"
+          case '?' => "."
+          case c => java.util.regex.Pattern.quote(c.toString)
+        }.mkString("^", "", "$")
+        val pre = pattern.takeWhile(c => c != '*' && c != '?')
+        scanTerms(f, WildcardQuery(pattern), s"wildcard '$f:$pattern'", "narrow the pattern")(
+          d => startingWith(pre)(d).where(term.rlike(rx)))
+      case RegexpQuery(pattern, _, _) =>
+        require(pattern.nonEmpty, "empty regexp pattern")
+        // cheap insurance on a user-facing query type: the pattern fans out
+        // through rlike over the vocabulary, so a catastrophic-backtracking
+        // pattern would stall every dictionary task. Dictionary-sized input
+        // already caps the blast radius; these guards make the failure a
+        // fast driver-side error instead.
+        require(pattern.length <= 256,
+          s"regexp pattern is ${pattern.length} chars — cap is 256")
+        require(!RegexpNestedQuant.matcher(RegexpLiterals.matcher(pattern).replaceAll("_")).find(),
+          s"regexp '/$pattern/' nests a quantifier inside a quantified group " +
+            "(catastrophic-backtracking guard) — rewrite without nested quantifiers")
+        java.util.regex.Pattern.compile(pattern) // fail fast on driver with a clear error
+        val pre = pattern.takeWhile(c => !"\\^$.|?*+()[]{}".contains(c))
+        scanTerms(f, RegexpQuery(pattern), s"regexp '$f:/$pattern/'", "narrow the pattern")(
+          d => startingWith(pre)(d).where(term.rlike(s"^(?:$pattern)$$")))
+      case FuzzyQuery(q, maxEdits, _, _) =>
+        require(maxEdits >= 0 && maxEdits <= 2,
+          s"fuzzy maxEdits must be 0..2 (Lucene's classic bound), got $maxEdits")
+        scanTerms(f, FuzzyQuery(q, maxEdits), s"fuzzy '$f:$q~$maxEdits'", "raise specificity")(
+          _.where(length(term).between(q.length - maxEdits, q.length + maxEdits) &&
+            levenshtein(term, lit(q)) <= maxEdits))
+      case TermRangeQuery(lo, hi, incLo, incHi, _, _) =>
+        require(lo.nonEmpty || hi.nonEmpty, "term range needs at least one bound")
+        scanTerms(f, TermRangeQuery(lo, hi, incLo, incHi),
+          s"range '$f:[${lo.getOrElse("*")} TO ${hi.getOrElse("*")}]'", "narrow the bounds") { d =>
+          val above = lo.fold(d)(l => d.where(if (incLo) term >= l else term > l))
+          hi.fold(above)(h => above.where(if (incHi) term <= h else term < h))
+        }
+    }
   }
 
-  /** Matching dictionary terms within `maxEdits` CLASSIC Levenshtein edits:
-    * a length-window prefilter (|len − len(q)| ≤ maxEdits) bounds the
-    * distance evaluation, which runs DISTRIBUTED via the codegen'd
-    * `levenshtein` expression — the whole expansion is a vocabulary-sized
-    * scan, never corpus-sized.
+  /** The cached, bounded dictionary scan behind every multi-term kind:
+    * `narrow` filters field `f`'s terms, the 1025-row limit keeps the
+    * collect bounded whatever the vocabulary, and more than 1024 matches is
+    * an error (the reference maxClauseCount is the rewrite budget).
     */
-  private def fuzzyTerms(f: String, q: String, maxEdits: Int): Seq[String] = {
-    require(maxEdits >= 0 && maxEdits <= 2,
-      s"fuzzy maxEdits must be 0..2 (Lucene's classic bound), got $maxEdits")
-    val key = (f, s"fz$maxEdits $q")
-    val cached = prefixCache.get(key)
-    if (cached.isDefined) return cached.get
-    val terms = termsDF
-      .where(col("field") === f &&
-        length(col("term")).between(q.length - maxEdits, q.length + maxEdits) &&
-        levenshtein(col("term"), lit(q)) <= maxEdits)
-      .select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"fuzzy '$f:$q~$maxEdits' expands to more than 1024 terms — raise " +
-        "specificity (reference maxClauseCount is the rewrite budget)")
-    prefixCache.put(key, terms)
-    terms
-  }
+  private def scanTerms(f: String, key: MultiTermQuery, what: String, advice: String)(
+      narrow: DataFrame => DataFrame): Seq[String] =
+    prefixCache.getOrElseUpdate((f, key), {
+      val terms = narrow(termsDF.where(col("field") === f))
+        .select("term").orderBy("term").limit(1025)
+        .as[String].collect().toSeq
+      require(terms.size <= 1024,
+        s"$what expands to more than 1024 terms (reference maxClauseCount is " +
+          s"the rewrite budget) — $advice")
+      terms
+    })
 
-  /** Dictionary terms within a lexicographic [lower, upper] range (either
-    * side open): both bounds push down to the parquet scan.
-    */
-  private def rangeTerms(f: String, lo: Option[String], hi: Option[String],
-      incLo: Boolean, incHi: Boolean): Seq[String] = {
-    require(lo.nonEmpty || hi.nonEmpty, "term range needs at least one bound")
-    val key = (f, s"rg ${lo.getOrElse("")} ${hi.getOrElse("")} $incLo$incHi")
-    val cached = prefixCache.get(key)
-    if (cached.isDefined) return cached.get
-    var base = termsDF.where(col("field") === f)
-    lo.foreach(l => base = base.where(if (incLo) col("term") >= l else col("term") > l))
-    hi.foreach(h => base = base.where(if (incHi) col("term") <= h else col("term") < h))
-    val terms = base.select("term").orderBy("term").limit(1025)
-      .as[String].collect().toSeq
-    require(terms.size <= 1024,
-      s"range '$f:[${lo.getOrElse("*")} TO ${hi.getOrElse("*")}]' expands to " +
-        "more than 1024 terms — narrow the bounds (reference maxClauseCount " +
-        "is the rewrite budget)")
-    prefixCache.put(key, terms)
-    terms
-  }
-
-  private def prepare(q0: Query, mode: ScoreMode): Prepared = {
+  private[search] def prepare(q0: Query, mode: ScoreMode): Prepared = {
     val q = Query.rewrite(expandPrefixes(q0))
     val keys = Query.leafKeys(q, field)
     // reference maxClauseCount (/root/reference/core/search/boolean.go:9)
@@ -928,6 +827,16 @@ final class IndexSearcher(
       BooleanClause(Occur.SHOULD, TermQuery(t, 1.0f, queryField))).toList)
   }
 
+  /** `c` must be a stored metadata column of the docs table — the columns a
+    * result can facet, sort or group on (internal columns excluded).
+    */
+  private def requireStoredColumn(c: String, role: String): Unit = {
+    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
+    require(docsDF.columns.contains(c) && !internal.contains(c),
+      s"$role column '$c' is not a stored metadata column " +
+        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+  }
+
   /** Facet counts — the distinct values of a stored metadata column among
     * ALL docs matching the query, with match counts, topN by (count desc,
     * value asc). The Lucene facet-module analogue (never ported in the
@@ -939,10 +848,7 @@ final class IndexSearcher(
     * scores, so matching runs in Ref32 mode.
     */
   def facetCounts(q: Query, facetCol: String, topN: Int = 20): DataFrame = {
-    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
-    require(docsDF.columns.contains(facetCol) && !internal.contains(facetCol),
-      s"facet column '$facetCol' is not a stored metadata column " +
-        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+    requireStoredColumn(facetCol, "facet")
     scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
       .select(col("docId"))
       .join(docsDF.select(col("docId"), col(facetCol)), "docId")
@@ -965,10 +871,7 @@ final class IndexSearcher(
     */
   def searchSortBy(q: Query, sortCol: String, k: Int,
       ascending: Boolean = true): DataFrame = {
-    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
-    require(docsDF.columns.contains(sortCol) && !internal.contains(sortCol),
-      s"sort column '$sortCol' is not a stored metadata column " +
-        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+    requireStoredColumn(sortCol, "sort")
     require(k > 0, s"k must be positive, got $k")
     val ord = if (ascending) col(sortCol).asc else col(sortCol).desc
     scoredDocs(q, ScoreMode.Ref32) // prepare() expands multi-term leaves
@@ -1000,10 +903,7 @@ final class IndexSearcher(
     */
   def groupedSearch(q: Query, groupCol: String, topGroups: Int,
       docsPerGroup: Int, mode: ScoreMode = ScoreMode.Ref32): DataFrame = {
-    val internal = Set("docId", "segId", "dl", "norm", "fieldDls", "wave", "contentSha")
-    require(docsDF.columns.contains(groupCol) && !internal.contains(groupCol),
-      s"group column '$groupCol' is not a stored metadata column " +
-        s"(available: ${docsDF.columns.filterNot(internal).mkString(", ")})")
+    requireStoredColumn(groupCol, "group")
     require(topGroups > 0 && docsPerGroup > 0,
       s"topGroups/docsPerGroup must be positive, got $topGroups/$docsPerGroup")
     val hits = scoredDocs(q, mode).toDF("docId", "score")
@@ -1029,7 +929,7 @@ final class IndexSearcher(
     * reproduces it), ranked (distance asc, docFreq desc, term asc), topN.
     * The exact input term is excluded (a suggestion you typed is not a
     * suggestion). Distributed over the vocabulary-sized terms table with
-    * the same length-window prefilter as [[fuzzyTerms]]; `limit(topN)` is a
+    * the same length-window prefilter as fuzzy expansion; `limit(topN)` is a
     * distributed TakeOrdered — postings are never touched. docFreq is the
     * INDEXED df (point-in-time, like Lucene's spellchecker — query-time
     * deletes don't re-rank suggestions).
@@ -1065,10 +965,16 @@ final class IndexSearcher(
 
   /** A quantifier applied to a group whose body already contains a
     * quantifier — the (a+)+ catastrophic-backtracking shape; see
-    * [[regexpTerms]].
+    * [[expansionTerms]]. Applied after [[RegexpLiterals]] are blanked out.
     */
   private val RegexpNestedQuant =
     java.util.regex.Pattern.compile("""\([^()]*[*+][^()]*\)\s*[*+{]""")
+
+  /** Escaped characters and `[...]` classes: a quantifier or paren inside
+    * them is a literal (`(a\+b)*`, `([+-]x)*`), not a nested quantifier.
+    */
+  private val RegexpLiterals =
+    java.util.regex.Pattern.compile("""\\.|\[(?:\\.|[^\]\\])*\]""")
 
   /** Structured score breakdown for one document (reference Explain,
     * /root/reference/core/search/explanation.go, term.go:163-193): the
@@ -1286,13 +1192,6 @@ final class IndexSearcher(
     hits.flatten ++ fetched
   }
 
-  /** MatchAllQuery evaluation: every live docId at constant score = boost.
-    * The range-group machinery only sees docs touched by query postings, so
-    * an all-docs leaf scans the DOCS table instead — column-pruned to docId
-    * — with deletes applied the same two ways as the postings path:
-    * broadcast binary-search below deleteBroadcastMax, a left-anti join
-    * against the (never collected) delete set beyond it.
-    */
   /** Union of every delete source as a one-column `docId` DataFrame (ranged
     * path; never collected).
     */
@@ -1303,6 +1202,13 @@ final class IndexSearcher(
     parts.reduceOption(_ union _).map(_.select(col("docId").cast("long").as("docId")))
   }
 
+  /** MatchAllQuery evaluation: every live docId at constant score = boost.
+    * The range-group machinery only sees docs touched by query postings, so
+    * an all-docs leaf scans the DOCS table instead — column-pruned to docId
+    * — with deletes applied the same two ways as the postings path:
+    * broadcast binary-search below deleteBroadcastMax, a left-anti join
+    * against the (never collected) delete set beyond it.
+    */
   private def matchAllScored(boost: Float): Dataset[ScoredDoc] = {
     val score = boost.toDouble
     val ids = docsDF.select(col("docId")).as[Long]
@@ -1376,50 +1282,48 @@ final class IndexSearcher(
     */
   def searchAfter(q: Query, after: ScoredDoc, k: Int,
       mode: ScoreMode = ScoreMode.Ref32): TopDocs =
-    searchFiltered(q, k, mode, None, Some(after))
+    searchFiltered(q, k, mode, Some(after))
 
-  /** Evaluate only the given docId ranges (WAND phases). */
-  private[search] def evalRanges(q: Query, mode: ScoreMode,
-      ranges: RangeSel, k: Int): TopDocs =
-    searchFiltered(q, k, mode, Some(ranges))
-
-  private def searchFiltered(q: Query, k: Int, mode: ScoreMode,
-      rangeFilter: Option[RangeSel], after: Option[ScoredDoc] = None): TopDocs = {
-    // cursor gate (searchAfter): matches at-or-before the cursor still COUNT
-    // but never enter a heap — captured by value in executor closures
-    val afterOk: ScoredDoc => Boolean = after match {
-      case None => _ => true
-      case Some(a) => sd => sd.score < a.score || (sd.score == a.score && sd.docId > a.docId)
+  private def searchFiltered(q0: Query, k: Int, mode: ScoreMode,
+      after: Option[ScoredDoc]): TopDocs =
+    Query.rewrite(expandPrefixes(q0)) match {
+      // all-docs path: the same count+heap treeAggregate over the live-docs scan
+      case MatchAllQuery(b) => topK(matchAllScored(b), k, afterGate(after))
+      case q => evalRanges(prepare(q, mode), None, k, after)
     }
 
-    Query.rewrite(expandPrefixes(q)) match {
-      case MatchAllQuery(b) =>
-        // all-docs path: one treeAggregate over the live-docs scan (same
-        // count+heap shape as the distributed tail below)
-        val ds = rangeFilter match {
-          case None => matchAllScored(b)
-          case Some(RangeSel.Ids(ids)) =>
-            val set = ids.toSet
-            val dpr = manifest.docsPerRange
-            matchAllScored(b).filter((sd: ScoredDoc) => set.contains(sd.docId / dpr))
-          case Some(RangeSel.Df(df)) =>
-            val dpr = manifest.docsPerRange
-            matchAllScored(b).toDF("docId", "score")
-              .withColumn("rangeId", expr(s"docId div ${dpr}L"))
-              .join(broadcast(df), Seq("rangeId"), "left_semi")
-              .select(col("docId"), col("score")).as[ScoredDoc]
-        }
-        val (total, heap) = ds.rdd.treeAggregate((0L, new BoundedHitQueue(k)))(
-          seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
-            if (afterOk(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
-          },
-          combOp = (a: (Long, BoundedHitQueue), b2: (Long, BoundedHitQueue)) =>
-            (a._1 + b2._1, a._2.merge(b2._2)),
-          depth = 2)
-        return TopDocs(total, heap.toSortedArray)
-      case _ => ()
-    }
-    val p = prepare(q, mode)
+  /** Cursor gate (searchAfter): matches at-or-before the cursor still COUNT
+    * but never enter a heap — captured by value in executor closures.
+    */
+  private def afterGate(after: Option[ScoredDoc]): ScoredDoc => Boolean = after match {
+    case None => _ => true
+    case Some(a) => sd => sd.score < a.score || (sd.score == a.score && sd.docId > a.docId)
+  }
+
+  /** Match count + k-bounded heap over a distributed scored set:
+    * per-partition heaps merge in O(log P) combiner rounds (treeAggregate,
+    * depth 2), so the driver receives O(√P) pre-merged k-heaps instead of
+    * P — at 10^5 partitions × k=1000 a flat collect would ship 10^8 rows.
+    */
+  private def topK(scored: Dataset[ScoredDoc], k: Int,
+      afterOk: ScoredDoc => Boolean): TopDocs = {
+    val (total, heap) = scored.rdd.treeAggregate((0L, new BoundedHitQueue(k)))(
+      seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
+        if (afterOk(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
+      },
+      combOp = (a: (Long, BoundedHitQueue), b: (Long, BoundedHitQueue)) =>
+        (a._1 + b._1, a._2.merge(b._2)),
+      depth = 2)
+    TopDocs(total, heap.toSortedArray)
+  }
+
+  /** Evaluate a prepared query over every range, or only over the selected
+    * ones — the WAND phases, which all run on the one Prepared their bounds
+    * were computed from.
+    */
+  private[search] def evalRanges(p: Prepared, rangeFilter: Option[RangeSel], k: Int,
+      after: Option[ScoredDoc] = None): TopDocs = {
+    val afterOk = afterGate(after)
 
     // singleton pulsing (reference postingsWriter.go:412-417,571-575): when
     // EVERY present query term has docFreq == 1, its docId is already inlined
@@ -1510,20 +1414,15 @@ final class IndexSearcher(
           rowsFor(p, rangeFilter).groupByKey(_._3)
             .flatMapGroups((rangeId: Long, it: Iterator[PRow]) =>
               geB.value.eval(rangeId, it))
-      // per-partition heaps merge in O(log P) combiner rounds (treeAggregate,
-      // depth 2): the driver receives O(√P) pre-merged k-heaps instead of P —
-      // at 10^5 partitions × k=1000 a flat collect would ship 10^8 rows
-      val (total, heap) = scored.rdd.treeAggregate((0L, new BoundedHitQueue(k)))(
-        seqOp = (acc: (Long, BoundedHitQueue), sd: ScoredDoc) => {
-          if (afterOk(sd)) acc._2.insert(sd.docId, sd.score); (acc._1 + 1, acc._2)
-        },
-        combOp = (a: (Long, BoundedHitQueue), b: (Long, BoundedHitQueue)) =>
-          (a._1 + b._1, a._2.merge(b._2)),
-        depth = 2)
-      TopDocs(total, heap.toSortedArray)
+      topK(scored, k, afterOk)
     }
   }
 }
+
+/** A compiled query plus everything the executors need. */
+private[search] final case class Prepared(
+    q: Query, keys: Seq[(String, String)], stats: Map[(String, String), TermStats],
+    ge: GroupEval)
 
 /** Serializable per-range evaluator shared by the distributed and the
   * driver-local search paths.
@@ -1603,15 +1502,7 @@ private[search] final class GroupEval(
     acc
   }
 
-  private[search] def scoreAt(acc: RangeAccum, slot: Int): Double = mode match {
-    case ScoreMode.ExactDouble => Eval.evalD(plan, acc, slot)
-    case ScoreMode.Ref32 =>
-      val f = Eval.evalF(plan, acc, slot)
-      if (f.isNaN) Double.NaN else f.toDouble
-  }
-
   private[search] def planRoot: CNode = plan
-  private[search] def scoreMode: ScoreMode = mode
 }
 
 /** Size-bounded hit queue with the reference collector's ordering: keep the

@@ -9,12 +9,12 @@ import graft.codec.SmallFloat
   *
   * Every posting row carries block-max metadata (maxFreq, minDl). For ANY
   * boolean tree of term/phrase leaves, a docId range's score is
-  * upper-bounded by a recursive bound over the tree (MUST bounds sum raw,
-  * SHOULD bounds clamp at 0, phrase bounds from member-row extremes);
-  * additionally a range can only contain a match if every MUST subtree and
-  * >= minShouldMatch SHOULD subtrees are matchable there (the reference's
-  * leapfrog cost-ordering of conjunctionScorer.go:16-40, restated
-  * range-wise and recursively). Two phases:
+  * upper-bounded by a recursive bound over the COMPILED plan (MUST bounds
+  * sum raw, SHOULD bounds clamp at 0, phrase bounds from member-row
+  * extremes); additionally a range can only contain a match if every MUST
+  * subtree and >= minShouldMatch SHOULD subtrees are matchable there (the
+  * reference's leapfrog cost-ordering of conjunctionScorer.go:16-40,
+  * restated range-wise and recursively). Two phases:
   *
   *  1. evaluate the B highest-bound eligible ranges → candidate top-k →
   *     threshold τ = kth score;
@@ -26,6 +26,10 @@ import graft.codec.SmallFloat
   * by WandSpec against the exact path. Only totalHits degrades to a lower
   * bound. Both phases read row *metadata* without payloads (Parquet column
   * pruning); payload decode happens only for surviving ranges.
+  *
+  * Bounds and evaluation share ONE compiled plan: every leaf bound comes
+  * from the leaf's own scorer (normalization and boosts included), so the
+  * bound can never drift from the scoring function it bounds.
   *
   * Scale: the bounds aggregation shuffles metadata rows only (bytes per row),
   * phase selection is a distributed top-B (TakeOrdered), and surviving-range
@@ -59,34 +63,16 @@ object Wand {
     scorer.boundScore(maxFreq.toFloat, safeByte)
   }
 
-  /** Mode-matched bound evaluator (advisor round-3 fix: tau and bounds must
-    * live in the SAME arithmetic — a float32 bound one ulp below a float64
-    * tau could wrongly prune a tie-break winner when the norm-quantization
-    * margin vanishes, e.g. b=0).
-    */
-  private sealed trait BScorer extends Serializable {
-    def bound(maxFreq: Int, minDl: Int): Double
-  }
-  private final case class FloatB(s: Similarity.Scorer) extends BScorer {
-    def bound(maxFreq: Int, minDl: Int): Double = rowBound(s, maxFreq, minDl).toDouble
-  }
-  /** ExactDouble bound: evaluates the exact scorer's boundScore at
-    * (maxFreq, minDl) in the same float64 arithmetic the evaluation uses.
-    * boundScore defaults to score — valid for every model monotone
-    * nondecreasing in freq and nonincreasing in dl (BM25 family, TF-IDF
-    * 1/√dl, LM/DFR/IB length penalties, DFI expectation growth); LM
-    * Pitman-Yor (whose discount term grows with dl) overrides it with a
-    * dl-independent bound (advisor round-4 fix).
-    */
-  private final case class ExactB(s: Similarity.ExactScorer) extends BScorer {
-    def bound(maxFreq: Int, minDl: Int): Double =
-      s.boundScore(maxFreq.toDouble, math.max(minDl, 1).toDouble)
-  }
-
   /** Pruned top-k for ANY query tree of term/phrase leaves and nested
     * booleans (MUST/SHOULD/MUST_NOT at every level, any minShouldMatch) —
-    * the bound tree mirrors the compiled plan recursively, so nothing falls
-    * back to exhaustive search except the all-singleton shortcut below.
+    * the bounds walk the compiled plan recursively, so nothing falls back to
+    * exhaustive search except the shortcuts below.
+    *
+    * `totalHits` depends on the path that served the query: when the
+    * pruned plan runs it counts only the evaluated ranges' matches, a LOWER
+    * BOUND (`totalHitsIsLowerBound = true`); when the singleton or row-cache
+    * shortcut (or the exhaustive fallback for a phase 1 short of k hits)
+    * serves it, the count is exact.
     */
   def searchTopK(searcher: IndexSearcher, q0: Query, k: Int,
       mode: ScoreMode = ScoreMode.Ref32, phase1Ranges: Int = 64,
@@ -111,94 +97,109 @@ object Wand {
     else pruned(searcher, q, k, mode, phase1Ranges)
   }
 
-  /** Serializable range-bound tree mirroring the compiled query plan: one
-    * node per scoring clause (a term duplicated across clauses scores once
-    * per clause in Eval, so each clause carries its OWN scorer and bounds
-    * sum per clause). MUST_NOT children are dropped entirely — they only
-    * remove docs, so ignoring them keeps the bound an upper bound and the
-    * eligibility a superset. `BNever` marks a subtree that can match
-    * nowhere (a term/phrase member with no dictionary entry).
+  /** Term indexes the bounds read: every present leaf outside MUST_NOT
+    * subtrees (those only remove docs — ignoring them keeps the bound an
+    * upper bound and the eligibility a superset). FILTER leaves are read for
+    * eligibility although they never score.
     */
-  private sealed trait BNode extends Serializable
-  private final case class BTerm(fkey: String, scorer: BScorer) extends BNode
-  private final case class BPhrase(fkeys: Array[String], scorer: BScorer, slop: Int) extends BNode
-  /** `filters` are Occur.FILTER children: gate eligibility like MUST,
-    * contribute exactly 0 to the bound (they never score).
-    */
-  private final case class BBool(must: Array[BNode], should: Array[BNode],
-      filters: Array[BNode], msm: Int) extends BNode
-  /** DisjunctionMax bound: (1−tie)·max + tie·sum over ELIGIBLE children
-    * bounds — an upper bound for tie ∈ [0,1] because the matching set is a
-    * subset of the eligible set and each per-clause score ≤ its bound.
-    */
-  private final case class BDisMax(children: Array[BNode], tie: Float) extends BNode
-  /** ConstantScore bound: exactly the constant; eligibility = child's. */
-  private final case class BConst(child: BNode, score: Float) extends BNode
-  private case object BNever extends BNode
+  private def boundTerms(n: CNode): Seq[Int] = n match {
+    case CLeafTerm(idx, _, _, _) => if (idx >= 0) Seq(idx) else Nil
+    case CLeafPhrase(idxs, _, _, _, _) => idxs.toSeq
+    case CBool(must, should, filters, _, _, _) =>
+      (must ++ should ++ filters).toSeq.flatMap(boundTerms)
+    case CDisMax(children, _) => children.toSeq.flatMap(boundTerms)
+    case CConst(child, _) => boundTerms(child)
+  }
 
-  /** Per-range (bound, canMatch) over the tree given the range's per-key
-    * (maxFreq, minDl) row lists. MUST bounds sum raw (negative-scoring LM
-    * models: every MUST clause matches), SHOULD bounds clamp at 0 (a
-    * non-matching clause contributes 0 — a common term's negative bound must
-    * not drag the range below a doc matching only the rare term).
-    * Eligibility: every MUST child matchable, >= msm SHOULD children
-    * matchable, and — with no MUSTs — at least one scoring child matchable
-    * (terms cannot match from another range).
+  /** One range's metadata rows, (maxFreq, minDl) per row, indexed by term
+    * index; null = the term has no row in the range.
     */
-  private def evalNode(n: BNode,
-      byKey: scala.collection.Map[String, scala.collection.mutable.ArrayBuffer[(Int, Int)]]): (Double, Boolean) =
+  private type RangeRows = Array[scala.collection.mutable.ArrayBuffer[(Int, Int)]]
+
+  /** A leaf's bound at (maxFreq, minDl), in the arithmetic the evaluation
+    * uses (advisor round-3 fix: τ and bounds must live in the SAME
+    * arithmetic — a float32 bound one ulp below a float64 τ could wrongly
+    * prune a tie-break winner when the norm-quantization margin vanishes,
+    * e.g. b=0). ExactDouble evaluates the exact scorer's boundScore:
+    * it defaults to score, valid for every model monotone nondecreasing in
+    * freq and nonincreasing in dl (BM25 family, TF-IDF 1/√dl, LM/DFR/IB
+    * length penalties, DFI expectation growth); LM Pitman-Yor (whose
+    * discount term grows with dl) overrides it with a dl-independent bound
+    * (advisor round-4 fix). Ref32 keeps the safe-byte float32 [[rowBound]].
+    */
+  private def leafBound(ref: Similarity.Scorer, exact: Similarity.ExactScorer,
+      exactMode: Boolean, maxFreq: Int, minDl: Int): Double =
+    if (exactMode) exact.boundScore(maxFreq.toDouble, math.max(minDl, 1).toDouble)
+    else rowBound(ref, maxFreq, minDl).toDouble
+
+  /** Per-range (bound, canMatch) over the compiled plan. A term duplicated
+    * across clauses scores once per clause, so each clause bounds with its
+    * own scorer and bounds sum per clause. MUST bounds sum raw
+    * (negative-scoring LM models: every MUST clause matches), SHOULD bounds
+    * clamp at 0 (a non-matching clause contributes 0 — a common term's
+    * negative bound must not drag the range below a doc matching only the
+    * rare term), FILTER children gate like MUST and contribute 0, MUST_NOT
+    * children are ignored. Coords (≤ 1 at every level) only lower evaluated
+    * scores, so summing unscaled clause bounds stays safe. Eligibility:
+    * every MUST and FILTER child matchable, >= msm SHOULD children
+    * matchable, and — with no required child — at least one SHOULD child
+    * matchable (terms cannot match from another range).
+    */
+  private def evalNode(n: CNode, rows: RangeRows, exactMode: Boolean): (Double, Boolean) =
     n match {
-      case BTerm(fk, sc) => byKey.get(fk) match {
-        case Some(rs) => (rs.iterator.map(e => sc.bound(e._1, e._2)).sum, true)
-        case None => (0.0, false)
-      }
-      case BPhrase(fks, sc, slop) =>
+      case CLeafTerm(idx, _, ref, exact) =>
+        if (idx >= 0 && rows(idx) != null)
+          (rows(idx).iterator.map(e => leafBound(ref, exact, exactMode, e._1, e._2)).sum, true)
+        else (0.0, false)
+      case CLeafPhrase(idxs, _, ref, exact, slop) =>
         // slop=0: phraseFreq <= min over members of the range's maxFreq.
         // slop>0: matches anchor on the FIRST member's positions, and one
         // later-member position can serve MANY anchors — only the first
         // member's maxFreq bounds the count. Either way a matching doc
         // contains EVERY member, so max over members' minDl is a valid dl
         // lower bound (a sloppy match still requires every member present).
-        if (fks.forall(byKey.contains)) {
+        if (idxs.forall(rows(_) != null)) {
           val maxF =
-            if (slop == 0) fks.iterator.map(fk => byKey(fk).iterator.map(_._1).max).min
-            else byKey(fks(0)).iterator.map(_._1).max
-          val minDl = fks.iterator.map(fk => byKey(fk).iterator.map(_._2).min).max
-          (sc.bound(maxF, minDl), true)
+            if (slop == 0) idxs.iterator.map(i => rows(i).iterator.map(_._1).max).min
+            else rows(idxs(0)).iterator.map(_._1).max
+          val minDl = idxs.iterator.map(i => rows(i).iterator.map(_._2).min).max
+          (leafBound(ref, exact, exactMode, maxF, minDl), true)
         } else (0.0, false)
-      case BBool(must, should, filters, msm) =>
+      case CBool(must, should, filters, _, msm, _) =>
         var bound = 0.0
         var ok = true
         var i = 0
         while (i < must.length) {
-          val (b, e) = evalNode(must(i), byKey)
+          val (b, e) = evalNode(must(i), rows, exactMode)
           if (!e) ok = false
           bound += b
           i += 1
         }
         i = 0
         while (i < filters.length) { // gate like MUST, bound contribution 0
-          val (_, e) = evalNode(filters(i), byKey)
-          if (!e) ok = false
+          if (!evalNode(filters(i), rows, exactMode)._2) ok = false
           i += 1
         }
         var sat = 0
         i = 0
         while (i < should.length) {
-          val (b, e) = evalNode(should(i), byKey)
+          val (b, e) = evalNode(should(i), rows, exactMode)
           if (e) { sat += 1; bound += math.max(0.0, b) }
           i += 1
         }
         if (sat < msm) ok = false
         if (must.isEmpty && filters.isEmpty && sat == 0) ok = false
         (bound, ok)
-      case BDisMax(children, tie) =>
+      case CDisMax(children, tie) =>
+        // (1−tie)·max + tie·sum over ELIGIBLE children's bounds — an upper
+        // bound for tie ∈ [0,1]: the matching set is a subset of the
+        // eligible set and each per-clause score ≤ its bound
         var mx = 0.0
         var sm = 0.0
         var any = false
         var i = 0
         while (i < children.length) {
-          val (b, e) = evalNode(children(i), byKey)
+          val (b, e) = evalNode(children(i), rows, exactMode)
           if (e) {
             any = true
             sm += b
@@ -207,178 +208,44 @@ object Wand {
           i += 1
         }
         if (any) (mx + tie.toDouble * (sm - mx), true) else (0.0, false)
-      case BConst(child, s) =>
-        val (_, e) = evalNode(child, byKey)
+      case CConst(child, s) => // exactly the constant; eligibility = child's
+        val e = evalNode(child, rows, exactMode)._2
         (if (e) s.toDouble else 0.0, e)
-      case BNever => (0.0, false)
     }
 
   private def pruned(searcher: IndexSearcher, q: Query,
       k: Int, mode: ScoreMode, phase1Count: Int): TopDocs = {
     val spark = searcher.sparkSession
     import spark.implicits._
-    def fld(of: Option[String]): String = of.getOrElse(searcher.field)
-    val stats = searcher.termStats(Query.leafKeys(q, searcher.field))
-    val sim = searcher.similarity
+    // ONE compilation serves the bounds and both evaluation phases
+    val p = searcher.prepare(q, mode)
+    val root = p.ge.planRoot
+    val keys = p.keys.toIndexedSeq
+    val termIdx = keys.zipWithIndex.toMap
+    val nTerms = keys.size
     val exactMode = mode == ScoreMode.ExactDouble
-    def cs(f: String) = searcher.collectionStats(f)
-    def phraseMemberStats(p: PhraseQuery): Seq[TermStats] =
-      p.terms.map(t => stats((fld(p.field), t)))
-    // the searcher compiles a phrase's normalization weight from composite
-    // stats (min member df, summed ttf) -- replicate exactly (compile.v/vD)
-    def phraseCompositeStats(p: PhraseQuery): TermStats = {
-      val ms = phraseMemberStats(p)
-      TermStats(fld(p.field), p.terms.mkString(" "),
-        ms.map(_.docFreq).min, ms.map(_.totalTermFreq).sum)
-    }
-    def phrasePresent(p: PhraseQuery): Boolean =
-      p.terms.forall(t => stats.contains((fld(p.field), t)))
-
-    // replicate the searcher's queryNorm recursion (compile.v / compile.vD)
-    // so TF-IDF-style similarities (qn != 1) cannot score above an
-    // unnormalized bound; coord <= 1 at every nesting level only lowers
-    // evaluated scores, so summing unscaled leaf bounds stays safe
-    def vF(q0: Query, topBoost: Float): Float = q0 match {
-      case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.valueForNormalization(ts, cs(fld(f)), boost * topBoost))
-          .getOrElse(0f)
-      case p @ PhraseQuery(_, boost, f, _) =>
-        if (phrasePresent(p))
-          sim.valueForNormalization(phraseCompositeStats(p), cs(fld(f)), boost * topBoost)
-        else 0f
-      case BooleanQuery(clauses, _, boost) =>
-        // FILTER clauses never score: no queryNorm contribution
-        clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => vF(c.query, boost * topBoost)).sum
-      case DisMaxQuery(cs0, _, boost) => cs0.map(c => vF(c, boost * topBoost)).sum
-      case ConstantScoreQuery(_, _) => 0f // constant never normalized
-      case q1: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q1 inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    def vD(q0: Query, topBoost: Double): Double = q0 match {
-      case TermQuery(t, boost, f) =>
-        stats.get((fld(f), t))
-          .map(ts => sim.exactValueForNormalization(ts, cs(fld(f)), boost.toDouble * topBoost))
-          .getOrElse(0.0)
-      case p @ PhraseQuery(_, boost, f, _) =>
-        if (phrasePresent(p))
-          sim.exactValueForNormalization(phraseCompositeStats(p), cs(fld(f)), boost.toDouble * topBoost)
-        else 0.0
-      case BooleanQuery(clauses, _, boost) =>
-        clauses.filter(c => c.occur != Occur.MUST_NOT && c.occur != Occur.FILTER)
-          .map(c => vD(c.query, boost.toDouble * topBoost)).sum
-      case DisMaxQuery(cs0, _, boost) => cs0.map(c => vD(c, boost.toDouble * topBoost)).sum
-      case ConstantScoreQuery(_, _) => 0.0 // constant never normalized
-      case q1: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q1 inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    val qn = sim.queryNorm(math.max(vF(q, 1.0f), Float.MinPositiveValue))
-    val qnD = sim.exactQueryNorm(math.max(vD(q, 1.0), Double.MinPositiveValue))
-
-    // NUL-joined (field, term) key (an escaped literal, NOT a raw byte --
-    // keeps the source text); NUL stays unambiguous even when keyword-field
-    // values contain spaces
-    val sep = "\u0000"
-    def fkey(kk: (String, String)): String = kk._1 + sep + kk._2
-
-    // mode-matched bounds (advisor round-3 fix): ExactDouble evaluation gets
-    // float64 bounds from the exact scorers; Ref32 keeps the safe-byte
-    // float32 bound. tau and bound then share one arithmetic.
-    def termB(tq: TermQuery): BScorer = {
-      val kk = (fld(tq.field), tq.term)
-      if (exactMode)
-        ExactB(sim.exactTermScorer(stats(kk), cs(kk._1), tq.boost.toDouble).normalize(qnD))
-      else FloatB(sim.termScorer(stats(kk), cs(kk._1), tq.boost).normalize(qn))
-    }
-    def phraseB(p: PhraseQuery): BScorer = {
-      val fn = fld(p.field)
-      if (exactMode)
-        ExactB(sim.exactPhraseScorer(phraseMemberStats(p), cs(fn), p.boost.toDouble).normalize(qnD))
-      else FloatB(sim.phraseScorer(phraseMemberStats(p), cs(fn), p.boost).normalize(qn))
-    }
-
-    // Query -> bound tree, mirroring compile.node's boost threading. A
-    // BooleanQuery whose MUST child can match nowhere collapses to BNever.
-    def build(q0: Query, topBoost: Float): BNode = q0 match {
-      case tq @ TermQuery(t, boost, f) =>
-        if (stats.contains((fld(f), t)))
-          BTerm(fkey((fld(f), t)), termB(TermQuery(t, boost * topBoost, f)))
-        else BNever
-      case p @ PhraseQuery(ts, boost, f, slop) =>
-        if (phrasePresent(p))
-          BPhrase(ts.map(t => fkey((fld(f), t))).toArray,
-            phraseB(PhraseQuery(ts, boost * topBoost, f, slop)), slop)
-        else BNever
-      case BooleanQuery(clauses, msm, boost) =>
-        val b = boost * topBoost
-        val must = clauses.filter(_.occur == Occur.MUST).map(c => build(c.query, b))
-        val should = clauses.filter(_.occur == Occur.SHOULD).map(c => build(c.query, b))
-          .filter(_ != BNever) // an unmatchable SHOULD clause never counts toward msm
-        val filters = clauses.filter(_.occur == Occur.FILTER).map(c => build(c.query, b))
-        if (must.contains(BNever) || filters.contains(BNever)) BNever
-        else if (should.size < msm) BNever
-        else if (must.isEmpty && should.isEmpty && filters.isEmpty) BNever
-        else BBool(must.toArray, should.toArray, filters.toArray, msm)
-      case DisMaxQuery(cs, tie, boost) =>
-        val children = cs.map(c => build(c, boost * topBoost)).filter(_ != BNever)
-        if (children.isEmpty) BNever else BDisMax(children.toArray, tie)
-      case ConstantScoreQuery(q1, s) =>
-        build(q1, 1.0f) match { // child gates only; boost lives in the constant
-          case BNever => BNever
-          case child => BConst(child, s)
-        }
-      // same guided error the exhaustive compile path throws (a raw
-      // MatchError here would hide the FilteredQuery guidance)
-      case q1: MatchAllQuery => throw new IllegalArgumentException(
-        s"$q1 inside a BooleanQuery is not supported — use it top-level or " +
-          "as FilteredQuery(MatchAllQuery(), filter)")
-      case p: MultiTermQuery => throw new IllegalStateException(
-        s"unexpanded $p — expandPrefixes must run before compile")
-    }
-    val root = build(q, 1.0f)
-    if (root == BNever) return TopDocs(0, Array.empty)
-
-    // keys the tree actually scores (MUST_NOT and unmatchable leaves are out)
-    def treeKeys(n: BNode): Seq[String] = n match {
-      case BTerm(fk, _) => Seq(fk)
-      case BPhrase(fks, _, _) => fks.toSeq
-      // filter keys are needed for ELIGIBILITY even though they never score
-      case BBool(m, s0, f0, _) => (m ++ s0 ++ f0).flatMap(treeKeys).toSeq
-      case BDisMax(cs0, _) => cs0.flatMap(treeKeys).toSeq
-      case BConst(c0, _) => treeKeys(c0)
-      case BNever => Nil
-    }
-    val scoringKeys = treeKeys(root).distinct.map { enc =>
-      val i = enc.indexOf(sep)
-      (enc.substring(0, i), enc.substring(i + 1))
-    }
-    if (scoringKeys.isEmpty) return TopDocs(0, Array.empty)
+    // a tree that is ineligible even in a range holding a row of EVERY
+    // present term can match nowhere (an absent term, or a phrase with an
+    // absent member, compiles to CLeafTerm(-1, ...)): zero hits, zero jobs
+    val everyTerm: RangeRows = Array.fill(nTerms)(scala.collection.mutable.ArrayBuffer((1, 1)))
+    if (!evalNode(root, everyTerm, exactMode)._2) return TopDocs(0, Array.empty)
 
     // per-range bound + eligibility in ONE typed pass over the range's
     // metadata rows (groupByKey on rangeId): <= #query keys x #live waves
     // entries of a few bytes each per group -- a bounded buffer, never
-    // O(docs). Typed rows, no string codec (round-4 judge fix: the former
-    // concat_ws encoding would break on a term containing the separator).
-    val rootB = root
-    val eligible = searcher.postingRowsMeta(scoringKeys)
+    // O(docs). Typed rows keyed by term index, no string codec.
+    val eligible = searcher.postingRowsMeta(boundTerms(root).distinct.map(keys))
       .select(col("field"), col("term"), col("rangeId"), col("maxFreq"), col("minDl"))
       .as[(String, String, Long, Int, Int)]
       .groupByKey(_._3)
       .mapGroups { (rangeId: Long, it: Iterator[(String, String, Long, Int, Int)]) =>
-        val byKey = scala.collection.mutable.HashMap
-          .empty[String, scala.collection.mutable.ArrayBuffer[(Int, Int)]]
+        val rows: RangeRows = new Array(nTerms)
         it.foreach { case (f, t, _, maxFreq, minDl) =>
-          byKey.getOrElseUpdate(f + sep + t,
-            scala.collection.mutable.ArrayBuffer.empty) += ((maxFreq, minDl))
+          val i = termIdx((f, t))
+          if (rows(i) == null) rows(i) = scala.collection.mutable.ArrayBuffer.empty
+          rows(i) += ((maxFreq, minDl))
         }
-        val (b, e) = evalNode(rootB, byKey)
+        val (b, e) = evalNode(root, rows, exactMode)
         (rangeId, b, e)
       }
       .toDF("rangeId", "rangeBound", "eligible")
@@ -390,11 +257,11 @@ object Wand {
       .limit(phase1Count).as[(Long, Double)].collect()
     if (phase1.isEmpty) return TopDocs(0, Array.empty)
     val phase1Set = phase1.map(_._1).toSet
-    val r1 = searcher.evalRanges(q, mode, RangeSel.Ids(phase1Set.toSeq), k)
+    val r1 = searcher.evalRanges(p, Some(RangeSel.Ids(phase1Set.toSeq)), k)
     if (r1.scoreDocs.length < k) {
       // not enough candidates among the best ranges → exhaustive (rare:
       // k larger than phase-1 coverage)
-      return searcher.search(q, k, mode)
+      return searcher.evalRanges(p, None, k)
     }
     val tau = r1.scoreDocs.last.score
 
@@ -416,7 +283,7 @@ object Wand {
       val sel =
         if (probe.length <= SurvivorCollectMax) RangeSel.Ids(probe.toSeq)
         else RangeSel.Df(survivorsDF)
-      val r2 = searcher.evalRanges(q, mode, sel, k)
+      val r2 = searcher.evalRanges(p, Some(sel), k)
       r2.scoreDocs.foreach(d => merged.insert(d.docId, d.score))
       total += r2.totalHits
     }

@@ -79,7 +79,13 @@ class MultiSearcherSpec extends AnyFunSuite with SparkTestBase {
   test("per-shard WAND merge ≡ monolithic exhaustive top-k") {
     for (q <- battery; mode <- Seq[ScoreMode](ScoreMode.Ref32, ScoreMode.ExactDouble)) {
       val m = mono.search(q, 10, mode)
-      val s = multi.searchWand(q, 10, mode)
+      // a fresh MultiSearcher per run: `multi`'s shards hold every row in
+      // their row caches (the search test ran first), and a short phase 1
+      // falls back to the exhaustive path, which fills them — either way
+      // the row-cache shortcut would answer and the pruning with merged
+      // stats would never run. A one-range phase 1 leaves ranges to prune.
+      val fresh = MultiSearcher(spark, Seq(shardAPath, shardBPath))
+      val s = try fresh.searchWand(q, 10, mode, phase1Ranges = 1) finally fresh.close()
       assert(s.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
         m.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"q=$q mode=$mode")
     }

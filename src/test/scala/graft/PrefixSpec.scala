@@ -435,5 +435,27 @@ class PrefixSpec extends AnyFunSuite with SparkTestBase {
     // the sane oracle-style pattern still works
     val ok = searcher.search(RegexpQuery("s[ct][a-z]+"), 5, ScoreMode.Ref32)
     assert(ok.totalHits > 0)
+    // a quantifier char that is escaped or inside a [...] class is a
+    // literal, not a nested quantifier: accepted
+    for (rx <- Seq("(a\\+b)*", "([+-]x)*", "([a+]x){2}"))
+      searcher.search(RegexpQuery(rx), 5, ScoreMode.Ref32)
+  }
+
+  test("expansion cache: one kind of multi-term query never reads another's entry") {
+    // each prefix spells the string cache tag the regexp / fuzzy expansion
+    // used to be stored under; its (empty) expansion must not leak into the
+    // later query on the same searcher
+    val s = new IndexSearcher(spark, indexPath)
+    for ((first, q) <- Seq[(Query, Query)](
+        PrefixQuery("rx parser") -> RegexpQuery("parser"),
+        PrefixQuery("fz1 parsr") -> FuzzyQuery("parsr", 1))) {
+      assert(s.search(first, 5, ScoreMode.Ref32).totalHits == 0)
+      val got = s.search(q, 12, ScoreMode.ExactDouble)
+      val want = new IndexSearcher(spark, indexPath).search(q, 12, ScoreMode.ExactDouble)
+      assert(want.totalHits > 0, s"fixture assumption broken for $q")
+      assert(got.totalHits == want.totalHits, s"$first then $q")
+      assert(got.scoreDocs.map(d => (d.docId, d.score)).toSeq ==
+        want.scoreDocs.map(d => (d.docId, d.score)).toSeq, s"$first then $q")
+    }
   }
 }

@@ -125,7 +125,10 @@ class WandSpec extends AnyFunSuite with SparkTestBase {
     // hazard: 'uniqtoken_9 OR import' — a doc matching only the rare term
     // outranks everything, but import's negative bound would drag its
     // range's bound below τ and wrongly prune it if summed raw
-    for (sim <- Seq[Similarity](new LMJelinekMercerSimilarity, new LMDirichletSimilarity)) {
+    // TF-IDF rides along: the one model whose queryNorm is not 1, so the
+    // bounds must come from the normalized scorers the evaluation uses
+    for (sim <- Seq[Similarity](new LMJelinekMercerSimilarity, new LMDirichletSimilarity,
+        new TfIdfSimilarity)) {
       val s = new IndexSearcher(spark, indexPath, similarity = sim)
       val qs = Seq[Query](
         BooleanQuery(Seq(
